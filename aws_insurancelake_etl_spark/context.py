@@ -79,6 +79,8 @@ class RunContext:
     lookups: LookupStore = field(default_factory=LookupStore)
     #: token vault rows accumulated by transform_tokenize within a run
     _token_vault: list[DataFrame] = field(default_factory=list)
+    #: frames cached through :meth:`cache` during this run
+    _cached: list[DataFrame] = field(default_factory=list)
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def arg(self, key: str, default: Any = None) -> Any:
@@ -87,6 +89,20 @@ class RunContext:
     def log_lineage(self, operation: str, df: DataFrame | None = None, **info: Any) -> None:
         if self.lineage is not None:
             self.lineage.update(operation, df=df, **info)
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, remembered so :meth:`release_cached` can drop it."""
+        df = df.cache()
+        with self._lock:
+            self._cached.append(df)
+        return df
+
+    def release_cached(self) -> None:
+        """Unpersist every frame this run cached through :meth:`cache`."""
+        with self._lock:
+            cached, self._cached = self._cached, []
+        for df in cached:
+            df.unpersist()
 
     def add_token_vault(self, df: DataFrame) -> None:
         with self._lock:

@@ -74,13 +74,9 @@ def split_by_null(df: DataFrame, field: str) -> tuple[DataFrame, DataFrame]:
     return df.filter(F.col(field).isNotNull()), df.filter(F.col(field).isNull())
 
 
-def exact_match(
-    incoming: DataFrame,
-    primary: DataFrame,
-    spec: dict,
-) -> tuple[DataFrame, DataFrame]:
-    """Left-outer join on (source_primary_key, source_system_key); matched
-    rows adopt the primary global id.  Returns (matched, unmatched)."""
+def _exact_resolve(incoming: DataFrame, primary: DataFrame, spec: dict) -> DataFrame:
+    """Left-outer broadcast join on (source_primary_key, source_system_key):
+    rows without a global id adopt the primary's; every row is kept."""
     global_id = spec["global_id_field"]
     pk = spec["exact_match_fields"]["source_primary_key"]
     sk = spec["exact_match_fields"]["source_system_key"]
@@ -92,10 +88,13 @@ def exact_match(
         (incoming[pk] == F.col("__pk")) & (incoming[sk] == F.col("__sk")),
         "leftouter",
     )
-    joined = joined.withColumn(global_id, F.coalesce(F.col(global_id), F.col("__gid"))).drop(
-        "__pk", "__sk", "__gid"
-    )
-    return split_by_null(joined, global_id)
+    joined = joined.withColumn(global_id, F.coalesce(F.col(global_id), F.col("__gid")))
+    return joined.drop("__pk", "__sk", "__gid")
+
+
+def exact_match(incoming: DataFrame, primary: DataFrame, spec: dict) -> tuple[DataFrame, DataFrame]:
+    """:func:`_exact_resolve` split into (matched, unmatched)."""
+    return split_by_null(_exact_resolve(incoming, primary, spec), spec["global_id_field"])
 
 
 def _field_score(field: dict) -> Column:
@@ -125,14 +124,11 @@ def _field_score(field: dict) -> Column:
     raise ValueError(f"Unsupported comparator type: {kind}")
 
 
-def fuzzy_match_level(
-    unmatched: DataFrame,
-    primary: DataFrame,
-    level: dict,
-    spec: dict,
-    truncation_observation=None,
-) -> tuple[DataFrame, DataFrame]:
-    """One blocking level; returns (matched, still_unmatched).
+def _resolve_level(
+    rows: DataFrame, primary: DataFrame, level: dict, spec: dict, truncation_observation=None
+) -> DataFrame:
+    """One blocking level over ``rows`` (carrying ``__row_id``): each null
+    global id adopts that of its best primary candidate over the threshold.
 
     **Hot-block protection** (``level["block_cap"]``, VERDICT r7 item
     8; default ON since round 9 at ``DEFAULT_BLOCK_CAP=1000``, opt out
@@ -155,10 +151,10 @@ def fuzzy_match_level(
     sort_field = spec.get("sort_field")
     key = blocking_key(level["blocks"])
 
-    incoming_b = unmatched.withColumn("__block", key).withColumn(
-        "__row_id", F.monotonically_increasing_id()
-    )
     score_fields = {f["fieldname"] for f in level["fields"]}
+    incoming_b = rows.filter(F.col(global_id).isNull()).select(
+        "__row_id", key.alias("__block"), *sorted(score_fields)
+    )
     primary_cols = [F.col(global_id).alias("__p_gid"), key.alias("__block")] + [
         F.col(name).alias(f"__p_{name}") for name in score_fields
     ]
@@ -207,12 +203,24 @@ def fuzzy_match_level(
         .filter(F.col("__rn") == 1)
         .select("__row_id", "__p_gid")
     )
-    out = (
-        incoming_b.join(best, "__row_id", "leftouter")
+    return (
+        rows.join(best, "__row_id", "leftouter")
         .withColumn(global_id, F.coalesce(F.col(global_id), F.col("__p_gid")))
-        .drop("__row_id", "__block", "__p_gid")
+        .drop("__p_gid")
     )
-    return split_by_null(out, global_id)
+
+
+def fuzzy_match_level(
+    unmatched: DataFrame,
+    primary: DataFrame,
+    level: dict,
+    spec: dict,
+    truncation_observation=None,
+) -> tuple[DataFrame, DataFrame]:
+    """One blocking level; returns (matched, still_unmatched)."""
+    rows = unmatched.withColumn("__row_id", F.monotonically_increasing_id())
+    out = _resolve_level(rows, primary, level, spec, truncation_observation)
+    return split_by_null(out.drop("__row_id"), spec["global_id_field"])
 
 
 def entity_match(
@@ -220,43 +228,34 @@ def entity_match(
     primary: DataFrame,
     spec: dict,
     new_id_column: Column | None = None,
-    persist_intermediates: bool = False,
 ) -> DataFrame:
     """Full match flow: prematched pass-through → exact → fuzzy levels →
-    new-id fill → unionByName — the four streams of
-    ``etl_consume_entity_match.py:404-431``.
+    new-id fill (the four streams of ``etl_consume_entity_match.py:
+    404-431``) as ONE frame whose global id is resolved by a left-join
+    chain, so the exact dedup and each level's exchanges run once.
 
-    ``persist_intermediates`` caches each level's shrinking ``unmatched``
-    frame (the reference's own inter-stage ``cache()`` discipline,
-    ``etl_consume_entity_match.py:404,425``): every union branch embeds
-    its full upstream, so an L-level spec otherwise re-derives the
-    match joins O(L²) times.  Left off for one-level/ad-hoc calls where
-    plan-level exchange reuse already covers it; the orchestrator's
-    long-lived flow turns it on.  Cached blocks are LRU-evicted; callers
-    running many flows in one session can ``spark.catalog.clearCache()``."""
+    ``__row_id`` is derived on a locally checkpointed frame, so both sides
+    of each level's join-back read the same rows even when the input is
+    an unpersisted plan; each level's output is checkpointed before the
+    next level reads it twice (the reference's inter-stage ``cache()``,
+    ``etl_consume_entity_match.py:404,425``).  Checkpoint blocks belong
+    to their RDDs, so nothing is left in the session's cache manager."""
     global_id = spec["global_id_field"]
     if global_id not in incoming.columns:
         incoming = incoming.withColumn(global_id, F.lit(None).cast("string"))
 
-    prematched, to_match = split_by_null(incoming, global_id)
-    if persist_intermediates:
-        to_match = to_match.cache()
-    exact_matched, unmatched = exact_match(to_match, primary, spec)
-
-    fuzzy_matched_parts: list[DataFrame] = []
-    for level in spec.get("levels", []):
-        if persist_intermediates:
-            unmatched = unmatched.cache()
-        matched, unmatched = fuzzy_match_level(unmatched, primary, level, spec)
-        fuzzy_matched_parts.append(matched)
-
-    filled_new = unmatched.withColumn(
-        global_id, new_id_column if new_id_column is not None else F.expr("uuid()")
-    )
-    out = prematched
-    for part in [exact_matched, *fuzzy_matched_parts, filled_new]:
-        out = out.unionByName(part)
-    return out
+    out = _exact_resolve(incoming, primary, spec)
+    levels = spec.get("levels", [])
+    if levels:
+        out = out.localCheckpoint(eager=False)
+        out = out.withColumn("__row_id", F.monotonically_increasing_id())
+        for i, level in enumerate(levels):
+            if i:
+                out = out.localCheckpoint(eager=False)
+            out = _resolve_level(out, primary, level, spec)
+        out = out.drop("__row_id")
+    new_id = new_id_column if new_id_column is not None else F.expr("uuid()")
+    return out.withColumn(global_id, F.coalesce(F.col(global_id), new_id))
 
 
 def merge_into_delta(

@@ -6,17 +6,18 @@ and writes ``<table>_quarantine_<stage>`` then aborts if *every* row was
 quarantined (:174-263); halt is evaluated last against the pre-quarantine
 DataFrame (:116-142, :311-314) and raises on any failure.
 
-One ``df.agg`` evaluates every aggregate rule of a stage; row-level rules
-fold into a single conjunction for the quarantine split (two filters over
-one cached plan).  CustomSql rules run as their own ``spark.sql`` against a
-``primary`` temp view; row-level CustomSql passes rows by semi-join on the
-selected key column(s).
+One ``df.agg`` per stage evaluates every warn/halt aggregate rule and the
+quarantine counts; row-level rules fold into one conjunction for the split
+(two filters over one cached plan).  CustomSql rules run as their own
+``spark.sql`` against a ``primary`` temp view; row-level CustomSql passes
+rows by semi-join on the selected key column(s).
 """
 
 from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -47,19 +48,20 @@ class DQStageResult:
     quarantine_df: DataFrame | None = None
 
 
+def _aggregate(df: DataFrame, exprs: dict[str, Column]) -> dict[str, Any]:
+    aliased = [expr.alias(name) for name, expr in exprs.items()]
+    return df.agg(*aliased).collect()[0].asDict() if aliased else {}
+
+
 def _evaluate_rules(
-    df: DataFrame, rules: list[CompiledRule], ctx: RunContext
+    df: DataFrame, rules: list[CompiledRule], ctx: RunContext,
+    agg_row: dict[str, Any] | None = None,
 ) -> list[RuleOutcome]:
-    """Aggregate pass over all rules; CustomSql via temp view."""
+    """Aggregate rules read ``agg_row`` (one ``df.agg`` when not given);
+    the other kinds run their own passes, CustomSql via temp view."""
+    if agg_row is None:
+        agg_row = _aggregate(df, {k: v for r in rules for k, v in r.agg_exprs.items()})
     outcomes: list[RuleOutcome] = []
-    agg_exprs: dict[str, Column] = {}
-    for rule in rules:
-        agg_exprs.update(rule.agg_exprs)
-    agg_row: dict[str, Any] = {}
-    if agg_exprs:
-        agg_row = (
-            df.agg(*[expr.alias(name) for name, expr in agg_exprs.items()]).collect()[0].asDict()
-        )
     for rule in rules:
         if rule.ri_keys is not None:
             outcomes.append(_evaluate_ref_integrity(df, rule))
@@ -80,32 +82,32 @@ def _evaluate_rules(
     return outcomes
 
 
+def _ratio_outcome(rule: CompiledRule, row, compare) -> RuleOutcome:
+    """Matched/total ratio against ``compare`` (default: every row matches)."""
+    total, matched = int(row["n"]), int(row["m"] or 0)
+    ratio = (matched / total) if total else 1.0
+    passed = getattr(ratio, _OPS[compare[0]])(compare[1]) if compare else matched == total
+    return RuleOutcome(rule.text, bool(passed), {"matched": matched, "total": total})
+
+
+def _ri_join(df: DataFrame, rule: CompiledRule, marker: str) -> DataFrame:
+    """``df`` ⟕ broadcast reference keys; ``marker`` is true where a key resolves."""
+    keys = rule.ri_keys.withColumnRenamed(rule.ri_ref_col, "__dq_ri_key")
+    keys = keys.withColumn(marker, F.lit(True))
+    return df.join(F.broadcast(keys), df[rule.ri_col].eqNullSafe(F.col("__dq_ri_key")), "left")
+
+
 def _evaluate_ref_integrity(df: DataFrame, rule: CompiledRule) -> RuleOutcome:
     """Membership ratio of fact keys in the distinct reference-key set:
     one broadcast left join (reference keys are dimension-sized), one
     aggregate.  Null fact keys count as violations, matching Glue DQDL.
     Default threshold is ratio = 1.0 (every key resolves)."""
     marker = "__dq_ri_match"
-    keys = rule.ri_keys.withColumnRenamed(rule.ri_ref_col, "__dq_ri_key").withColumn(
-        marker, F.lit(True)
-    )
-    joined = df.join(
-        F.broadcast(keys),
-        df[rule.ri_col].eqNullSafe(F.col("__dq_ri_key")),
-        "left",
-    )
-    row = joined.agg(
+    row = _ri_join(df, rule, marker).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.coalesce(F.col(marker), F.lit(False)).cast("long")).alias("m"),
     ).collect()[0]
-    total, matched = int(row["n"]), int(row["m"] or 0)
-    ratio = (matched / total) if total else 1.0
-    if rule.ri_compare is not None:
-        op, threshold = rule.ri_compare
-        passed = getattr(ratio, _OPS[op])(threshold)
-    else:
-        passed = matched == total
-    return RuleOutcome(rule.text, bool(passed), {"matched": matched, "total": total})
+    return _ratio_outcome(rule, row, rule.ri_compare)
 
 
 def _evaluate_dataset_match(df: DataFrame, rule: CompiledRule) -> RuleOutcome:
@@ -131,14 +133,7 @@ def _evaluate_dataset_match(df: DataFrame, rule: CompiledRule) -> RuleOutcome:
         F.count(F.lit(1)).alias("n"),
         F.sum(marker.cast("long")).alias("m"),
     ).collect()[0]
-    total, matched = int(row["n"]), int(row["m"] or 0)
-    ratio = (matched / total) if total else 1.0
-    if rule.dm_compare is not None:
-        op, threshold = rule.dm_compare
-        passed = getattr(ratio, _OPS[op])(threshold)
-    else:
-        passed = matched == total
-    return RuleOutcome(rule.text, bool(passed), {"matched": matched, "total": total})
+    return _ratio_outcome(rule, row, rule.dm_compare)
 
 
 def _evaluate_custom_sql(df: DataFrame, rule: CompiledRule, ctx: RunContext) -> RuleOutcome:
@@ -157,31 +152,22 @@ def _evaluate_custom_sql(df: DataFrame, rule: CompiledRule, ctx: RunContext) -> 
     if op == "between":
         passed = value < scalar < value2
     else:
-        py_ops = {">": "__gt__", ">=": "__ge__", "<": "__lt__", "<=": "__le__",
-                  "=": "__eq__", "!=": "__ne__"}
-        passed = getattr(scalar, py_ops[op])(value)
+        passed = getattr(scalar, _OPS[op])(value)
     return RuleOutcome(rule.text, bool(passed), {"scalar": scalar})
 
 
 def _quarantine_split(
     df: DataFrame, rules: list[CompiledRule], ctx: RunContext
 ) -> tuple[DataFrame, DataFrame]:
-    """Return (passing_rows, failing_rows) across all quarantine rules."""
+    """(passing_rows, failing_rows) across all rules; a null predicate fails."""
     predicate: Column | None = None
     for rule in rules:
         rule_pred = rule.predicate
+        marker = f"__dq_pass_{abs(hash(rule.text)) % (10**9)}"
         if rule.ri_keys is not None:
             # Row-level referential integrity: a row passes when its key
             # appears in the broadcast distinct reference-key set.
-            marker = f"__dq_pass_{abs(hash(rule.text)) % (10**9)}"
-            keys = rule.ri_keys.withColumnRenamed(
-                rule.ri_ref_col, "__dq_ri_key"
-            ).withColumn(marker, F.lit(True))
-            df = df.join(
-                F.broadcast(keys),
-                df[rule.ri_col].eqNullSafe(F.col("__dq_ri_key")),
-                "left",
-            ).drop("__dq_ri_key")
+            df = _ri_join(df, rule, marker).drop("__dq_ri_key")
             rule_pred = F.coalesce(F.col(marker), F.lit(False))
         if rule.custom_sql is not None and rule.custom_sql_compare is None:
             # Row-level CustomSql: rows pass when their key tuple appears in
@@ -190,7 +176,6 @@ def _quarantine_split(
             df.createOrReplaceTempView("primary")
             keys_df = ctx.spark.sql(rule.custom_sql).distinct()
             key_cols = keys_df.columns
-            marker = f"__dq_pass_{abs(hash(rule.text)) % (10**9)}"
             marked = keys_df.withColumn(marker, F.lit(True))
             join_cond = [df[c].eqNullSafe(marked[c]) for c in key_cols]
             df = df.join(F.broadcast(marked), join_cond, "left").drop(*[marked[c] for c in key_cols])
@@ -226,26 +211,40 @@ def run_dq_stage(
     quarantine = [compiler.compile(r) for r in stage_rules.get("quarantine_rules", [])]
     halt = [compiler.compile(r) for r in stage_rules.get("halt_rules", [])]
 
+    aggs = {k: v for r in warn + halt for k, v in r.agg_exprs.items()}
+    fused = quarantine and not any(
+        r.ri_keys is not None or (r.custom_sql is not None and r.custom_sql_compare is None)
+        for r in quarantine
+    )
+    if fused:  # plain predicates: the quarantine counts ride the same aggregate
+        row_level = [r.predicate.cast("boolean") for r in quarantine if r.predicate is not None]
+        passes = reduce(lambda a, b: a & b, row_level, F.lit(True))
+        aggs["__dq_rows"] = F.count(F.lit(1))
+        aggs["__dq_passing"] = F.count_if(F.coalesce(passes, F.lit(False)))
+    agg_row = _aggregate(df, aggs)
+
     pre_quarantine_df = df
     if warn:
-        for outcome in _evaluate_rules(df, warn, ctx):
-            outcome_kind = "warn"
+        for outcome in _evaluate_rules(df, warn, ctx, agg_row):
             result.outcomes.append(outcome)
             if not outcome.passed:
-                logger.warning("DQ %s rule failed (%s): %s", outcome_kind, stage, outcome.rule)
+                logger.warning("DQ warn rule failed (%s): %s", stage, outcome.rule)
             ctx.log_lineage("dq-warn", rule=outcome.rule, passed=outcome.passed,
                             observed=outcome.observed)
 
     if quarantine:
         passing, failing = _quarantine_split(df, quarantine, ctx)
         failing = failing.withColumn("quarantine_timestamp", F.current_timestamp())
-        failing_count = failing.count()
+        if fused:
+            failing_count = agg_row["__dq_rows"] - agg_row["__dq_passing"]
+        else:
+            failing_count = failing.count()
         result.quarantined_count = failing_count
         result.quarantine_df = failing
         if failing_count:
             if quarantine_writer is not None:
                 quarantine_writer(failing, f"{table_name}_quarantine_{stage}")
-            if passing.limit(1).count() == 0:
+            if (agg_row["__dq_passing"] if fused else passing.limit(1).count()) == 0:
                 raise DataQualityQuarantineAllRowsError(
                     f"All rows failed quarantine rules in stage {stage}"
                 )
@@ -253,7 +252,8 @@ def run_dq_stage(
         ctx.log_lineage("dq-quarantine", stage=stage, quarantined=failing_count)
 
     if halt:
-        failures = [o for o in _evaluate_rules(pre_quarantine_df, halt, ctx) if not o.passed]
+        outcomes = _evaluate_rules(pre_quarantine_df, halt, ctx, agg_row)
+        failures = [o for o in outcomes if not o.passed]
         result.outcomes.extend(failures)
         if failures:
             raise DataQualityHaltError(

@@ -72,12 +72,14 @@ def collect_to_cleanse(
     execution_id = str(ctx.arg("execution_id", "local-run"))
     recommendations: dict = {}
 
-    df = read_input(spark, source_path, config.input_spec, config.mapping)
-    df = df.cache()
+    df = ctx.cache(read_input(spark, source_path, config.input_spec, config.mapping))
     ctx.log_lineage("read", df=df, source=source_path)
+    # the read audit's row count doubles as the empty-input check
     if ctx.lineage is not None:
-        ctx.lineage.numeric_audit(df)
-    if not df.head(1):
+        rows = ctx.lineage.numeric_audit(df)["row_count"]
+    else:
+        rows = len(df.head(1))
+    if not rows:
         raise RuntimeError(f"Input file {source_path} contained no data")
 
     # Schema mapping: fixed-width input is already mapped by the reader.
@@ -96,7 +98,7 @@ def collect_to_cleanse(
     df = apply_transform_spec(df, config.transform_spec, ctx)
     df = add_partition_columns(df, partition, execution_id)
 
-    df = df.cache()
+    df = ctx.cache(df)
     df, _ = run_dq_stage(df, config.dq_rules, "after_transform", ctx, table, qwriter)
 
     # Numeric audit rides the write job itself (df.observe) — zero extra
@@ -145,19 +147,23 @@ def cleanse_to_consume(
     # plain-catalog SQL file costs nothing extra
     from ..sources.lakehouse_sql import sql_over_refs
 
-    df = sql_over_refs(spark, sql_text).cache()
+    df = ctx.cache(sql_over_refs(spark, sql_text))
     ctx.log_lineage("sparksql", df=df, sql=sql_text)
-    if ctx.lineage is not None:
-        ctx.lineage.numeric_audit(df)
 
     dq_rules = config.dq_rules if config else {}
     partition = {"year": "0000", "month": "00", "day": "00"}
     qwriter = quarantine_writer(ctx, database, partition, execution_id)
     df, _ = run_dq_stage(df, dq_rules, "after_sparksql", ctx, target_table, qwriter)
 
+    # the numeric audit rides the consume write job (df.observe)
+    write_df, finish_audit = df, None
+    if ctx.lineage is not None:
+        write_df, finish_audit = ctx.lineage.numeric_audit_observed(df)
     write_consume_table(
-        df, database, target_table, ctx, table_format=table_format
+        write_df, database, target_table, ctx, table_format=table_format
     )
+    if finish_audit is not None:
+        finish_audit()
 
     if config and config.view_sql:
         create_database(spark, database)

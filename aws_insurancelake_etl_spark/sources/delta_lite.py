@@ -4432,6 +4432,27 @@ def reorg_purge(spark: SparkSession, path: str) -> dict:
     }
 
 
+def predicate_columns(spark: SparkSession, predicate: str) -> set[str] | None:
+    """Lower-cased names of the columns a SQL predicate references, read
+    from the session's SQL parser: no analysis, no Spark job.  None when
+    the text does not parse or holds a subquery, whose references the
+    parse tree does not expose."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        leaves = parser.parseExpression(predicate).collectLeaves()
+    except Exception:  # noqa: BLE001 — py4j wraps the ParseException
+        return None
+    names: set[str] = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "UnresolvedAttribute":
+            names.add(leaf.nameParts().mkString(".").lower())
+        elif kind in ("ListQuery", "Exists", "ScalarSubquery", "LateralSubquery"):
+            return None
+    return names
+
+
 def _delete_partition_metadata_only(
     spark: SparkSession, path: str, snap: Snapshot, predicate: str
 ):
@@ -4444,6 +4465,11 @@ def _delete_partition_metadata_only(
     CDF commits must stage change rows, which requires reading)."""
     part_cols = list(snap.partition_columns)
     if not part_cols or _cdf_enabled(snap):
+        return None
+    # a data-column predicate is decided from its parse tree, so the
+    # probe below never fails analysis (Spark logs that as an ERROR)
+    refs = predicate_columns(spark, predicate)
+    if refs is None or not refs <= {c.lower() for c in part_cols}:
         return None
     field_by_name = {f.name: f for f in snap.schema.fields}
     probe_schema = StructType(

@@ -6357,25 +6357,14 @@ def delete_iceberg(
         )
     )
     if fast:
-        # Pre-check the predicate's column references driver-side: the
-        # fast path is only sound when every TABLE column it names is an
-        # identity partition source.  A regex identifier scan (backtick
-        # or bare) is conservative — a function name colliding with a
-        # data column merely skips to the MOR path — and avoids letting
-        # ``.where()`` throw AnalysisException, which Spark logs as a
-        # ~100-line ERROR stack per call (judge r9 "what's wrong" #1).
-        import re as _re
+        # The fast path is only sound when every column the predicate
+        # names is an identity partition source.  Deciding that from the
+        # parse tree keeps ``.where()`` below from failing analysis,
+        # which Spark logs as a ~100-line ERROR stack per call.
+        from .delta_lite import predicate_columns
 
-        refs = {
-            g1 or g2
-            for g1, g2 in _re.findall(
-                r"`([^`]+)`|\b([A-Za-z_][A-Za-z0-9_]*)\b", predicate
-            )
-        }
-        non_part_cols = {
-            f.name for f in table_schema.fields
-        } - set(identity_sources)
-        if refs & non_part_cols:
+        refs = predicate_columns(spark, predicate)
+        if refs is None or not refs <= {c.lower() for c in identity_sources}:
             fast = False
     if fast:
         from pyspark.sql.types import (

@@ -1100,3 +1100,37 @@ def test_history_carries_operation_metrics(spark, tmp_path):
     assert m["numOutputRows"] == "7"
     assert int(m["numFiles"]) >= 1
     assert int(m["numOutputBytes"]) > 0
+
+
+def test_data_column_delete_skips_partition_probe_without_error_log(spark, tmp_path):
+    """A predicate on a data column is recognised from its parse tree, so
+    the partition probe never fails analysis (PySpark logs such a failure
+    as an ERROR through its query-context loggers)."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    path = str(tmp_path / "probe")
+    dl.write_delta(
+        spark.createDataFrame([Row(id=i, grp="a" if i % 2 else "b") for i in range(8)]),
+        path, partition_by=["grp"],
+    )
+    assert dl.predicate_columns(spark, "grp = 'a' AND id > 1") == {"grp", "id"}
+    records: list = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    loggers = [
+        PySparkLogger.getLogger(n) for n in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    for lg in loggers:
+        lg.addHandler(handler)
+    try:
+        res = dl.delete_delta(spark, path, "id >= 6")
+        part = dl.delete_delta(spark, path, "grp = 'b'")
+    finally:
+        for lg in loggers:
+            lg.removeHandler(handler)
+    assert records == []
+    assert res["rows_deleted"] == 2 and not res.get("metadata_only")
+    assert part["metadata_only"] is True and part["rows_deleted"] == 3
+    assert sorted(r.id for r in dl.read_delta(spark, path).collect()) == [1, 3, 5]

@@ -395,3 +395,98 @@ def test_dq_match_rule_hardening(spark):
     r_ne = compiler.compile("AggregateMatch 'sum(amount)' 'sum(z.amount)' != 1.0")
     got = {o.rule: o.passed for o in _evaluate_rules(df, [r_eq, r_ne], ctx)}
     assert got[r_eq.text] is True and got[r_ne.text] is False
+
+
+def _count_actions(spark, monkeypatch) -> list:
+    """Record every DataFrame action (collect/count/head/take/first)."""
+    frame_class = type(spark.range(1))
+    calls: list = []
+    for name in ("collect", "count", "head", "take", "first", "toPandas", "isEmpty"):
+        original = getattr(frame_class, name)
+
+        def spy(self, *a, _original=original, _name=name, **kw):
+            calls.append(_name)
+            return _original(self, *a, **kw)
+
+        monkeypatch.setattr(frame_class, name, spy)
+    return calls
+
+
+def test_plain_stage_runs_one_aggregate_action(spark, ctx, monkeypatch):
+    """Warn, quarantine and halt rules that are plain predicates or
+    aggregates are answered by ONE df.agg, quarantine counts included;
+    rows whose predicate is null are quarantined."""
+    df = policy_df(spark).cache()
+    df.count()
+    written: list = []
+    rules = {"after_transform": {
+        "warn_rules": ["ColumnValues 'WrittenPremiumAmount' >= 0", "RowCount > 2"],
+        "quarantine_rules": ["ColumnValues 'EffectiveDate' matches '2022-.*'"],
+        "halt_rules": ["(ColumnExists 'PolicyNumber') and (IsComplete 'PolicyNumber')"],
+    }}
+    calls = _count_actions(spark, monkeypatch)
+    out, result = run_dq_stage(
+        df, rules, "after_transform", ctx,
+        quarantine_writer=lambda failing, table: written.append(table),
+    )
+    assert calls == ["collect"]
+    monkeypatch.undo()
+    warn = {o.rule: o.passed for o in result.outcomes}
+    assert warn == {"ColumnValues 'WrittenPremiumAmount' >= 0": False, "RowCount > 2": True}
+    # the null EffectiveDate row fails its predicate with NULL: quarantined
+    assert result.quarantined_count == 1 and written == ["primary_quarantine_after_transform"]
+    assert sorted(r.PolicyNumber for r in out.collect()) == [1, 2]
+    assert [r.PolicyNumber for r in result.quarantine_df.collect()] == [3]
+
+
+def test_all_quarantined_abort_follows_quarantine_write(spark, ctx):
+    df = policy_df(spark)
+    written: list = []
+    rules = {"after_transform": {
+        "quarantine_rules": ["ColumnValues 'WrittenPremiumAmount' > 99999999"],
+        "halt_rules": ["ColumnValues 'PolicyNumber' > 100"],
+    }}
+    with pytest.raises(DataQualityQuarantineAllRowsError):
+        run_dq_stage(df, rules, "after_transform", ctx,
+                     quarantine_writer=lambda failing, table: written.append(failing.count()))
+    assert written == [3]  # the quarantine landed; the abort precedes the halt
+
+
+def test_halt_raises_after_quarantine_table_landed(spark, ctx):
+    df = policy_df(spark)
+    events: list = []
+    rules = {"after_transform": {
+        "warn_rules": ["Completeness 'EffectiveDate' > 0.9"],
+        "quarantine_rules": ["ColumnValues 'WrittenPremiumAmount' >= 0"],
+        "halt_rules": ["ColumnValues 'WrittenPremiumAmount' >= 0"],
+    }}
+    ctx.log_lineage = lambda op, df=None, **info: events.append(op)
+    with pytest.raises(DataQualityHaltError):
+        run_dq_stage(df, rules, "after_transform", ctx,
+                     quarantine_writer=lambda failing, table: events.append(("write", failing.count())))
+    assert events == ["dq-warn", ("write", 1), "dq-quarantine"]
+
+
+def test_mixed_stage_falls_back_for_join_rules(spark, ctx):
+    """ReferentialIntegrity and row-level CustomSql quarantine rules need
+    key joins: the stage falls back to counting the split frames and still
+    quarantines the union of every rule's failures."""
+    df = policy_df(spark)
+    spark.createDataFrame([(1,), (2,)], "k int").createOrReplaceTempView("dq_known")
+    rules = {"after_sparksql": {
+        "warn_rules": ["ReferentialIntegrity 'PolicyNumber' 'dq_known.k'", "RowCount = 3"],
+        "quarantine_rules": [
+            "ColumnValues 'NewOrRenewal' in [ 'New', 'Renewal', 'Other' ]",
+            "ReferentialIntegrity 'PolicyNumber' 'dq_known.k'",
+            "CustomSql 'SELECT PolicyNumber FROM primary WHERE WrittenPremiumAmount > 0'",
+        ],
+        "halt_rules": ["CustomSql 'SELECT COUNT(*) FROM primary' = 3"],
+    }}
+    out, result = run_dq_stage(df, rules, "after_sparksql", ctx)
+    warn = {o.rule: o.passed for o in result.outcomes}
+    assert warn["ReferentialIntegrity 'PolicyNumber' 'dq_known.k'"] is False
+    assert warn["RowCount = 3"] is True
+    # 2 fails CustomSql (premium -5), 3 fails ReferentialIntegrity
+    assert result.quarantined_count == 2
+    assert [r.PolicyNumber for r in out.collect()] == [1]
+    assert sorted(out.columns) == sorted(df.columns)  # no marker column leaks

@@ -484,3 +484,138 @@ def test_fuzzy_block_cap_default_on_and_opt_out(spark, monkeypatch):
         incoming, primary, dict(level, block_cap=None), spec
     )
     assert matched_off.count() == 5
+
+
+# --------------------------------------------------- equivalence vs DuckDB
+
+_EQ_NAMES = ["anna", "anne", "anya", "bob", "bobby", "carl", "carla", "dora"]
+_EQ_INCOMING_NAMES = ["anna", "annie", "bobbi", "karl", "dorra", "zed", "anya", "carl"]
+
+#: two fuzzy levels: level 1 binarizes a levenshtein name score and keeps
+#: only perfect-score candidates from a block capped at 3 primary rows;
+#: level 2 (blocked on city) sees only level 1's leftovers and accepts
+#: either a similar name or the same nation, so most pairs tie on score
+_EQ_SPEC = {
+    "global_id_field": "gid",
+    "sort_field": "bal",
+    "exact_match_fields": {"source_primary_key": "pk", "source_system_key": "src"},
+    "levels": [
+        {"blocks": ["nation", "name[:1]"], "threshold": 1.0, "block_cap": 3,
+         "fields": [{"fieldname": "name", "type": "string", "method": "levenshtein",
+                     "threshold": 0.7, "weight": 1}]},
+        {"blocks": ["city"], "threshold": 0.5,
+         "fields": [{"fieldname": "name", "type": "string", "method": "levenshtein",
+                     "threshold": 0.5, "weight": 1},
+                    {"fieldname": "nation", "type": "exact", "weight": 1}]},
+    ],
+}
+
+_EQ_ORACLE = """
+WITH ex AS (
+    SELECT i.*, coalesce(i.gid, p.gid) AS g0
+    FROM inc i LEFT JOIN prim p ON i.pk = p.pk AND i.src = p.src
+),
+cap1 AS (
+    SELECT *, nation || substr(name, 1, 1) AS blk FROM prim
+    QUALIFY row_number() OVER (PARTITION BY nation || substr(name, 1, 1)
+                               ORDER BY bal DESC NULLS LAST, gid) <= 3
+),
+cand1 AS (
+    SELECT e.id, c.gid AS pg, c.bal,
+           CASE WHEN 1 - levenshtein(e.name, c.name)
+                    / greatest(length(e.name), length(c.name)) >= 0.7
+                THEN 1.0 ELSE 0.0 END AS score
+    FROM ex e JOIN cap1 c ON e.nation || substr(e.name, 1, 1) = c.blk
+    WHERE e.g0 IS NULL
+),
+best1 AS (
+    SELECT id, pg FROM cand1 WHERE score >= 1.0
+    QUALIFY row_number() OVER (PARTITION BY id ORDER BY score DESC,
+                               bal DESC NULLS LAST, pg) = 1
+),
+l1 AS (SELECT e.*, coalesce(e.g0, b.pg) AS g1 FROM ex e LEFT JOIN best1 b USING (id)),
+cand2 AS (
+    SELECT l.id, c.gid AS pg, c.bal,
+           ((CASE WHEN 1 - levenshtein(l.name, c.name)
+                      / greatest(length(l.name), length(c.name)) >= 0.5
+                  THEN 1.0 ELSE 0.0 END)
+            + (CASE WHEN c.nation = l.nation THEN 1.0 ELSE 0.0 END)) / 2 AS score
+    FROM l1 l JOIN prim c ON l.city = c.city
+    WHERE l.g1 IS NULL
+),
+best2 AS (
+    SELECT id, pg FROM cand2 WHERE score >= 0.5
+    QUALIFY row_number() OVER (PARTITION BY id ORDER BY score DESC,
+                               bal DESC NULLS LAST, pg) = 1
+)
+SELECT l.id, coalesce(l.g1, b.pg, md5('new-' || CAST(l.id AS VARCHAR))) AS gid,
+       CASE WHEN l.gid IS NOT NULL THEN 'pre' WHEN l.g0 IS NOT NULL THEN 'exact'
+            WHEN l.g1 IS NOT NULL THEN 'level1' WHEN b.pg IS NOT NULL THEN 'level2'
+            ELSE 'new' END AS stream
+FROM l1 l LEFT JOIN best2 b USING (id)
+"""
+
+
+def _eq_rows():
+    """Deterministic primary/incoming rows: sort-field ties and nulls, hot
+    blocks above the cap, prematched, exact and fuzzy-only incoming rows."""
+    primary = [
+        (f"P{i:03d}", i, str(i % 2), _EQ_NAMES[i % 8], "AB"[i % 2 if i < 30 else 0],
+         "xyz"[i % 3], None if i % 7 == 0 else float((i * 5) % 4))
+        for i in range(40)
+    ]
+    incoming = []
+    for j in range(60):
+        exact = j % 5 == 0
+        pk = j % 40 if exact else 500 + j
+        incoming.append((
+            1000 + j, pk, str(pk % 2) if exact else "9",
+            _EQ_INCOMING_NAMES[j % 8], "AB"[(j // 3) % 2], "xyzw"[j % 4],
+            f"PRE{j}" if j % 9 == 0 else None,
+        ))
+    return primary, incoming
+
+
+
+def test_entity_match_equals_duckdb_restatement(spark):
+    """The one-frame match chain against an independent SQL restatement
+    of the four-stream flow, on an input that is NOT persisted (its rows
+    come off a shuffle, so re-evaluating it may reorder them)."""
+    import duckdb
+    import pandas as pd
+
+    primary_rows, incoming_rows = _eq_rows()
+    prim_cols = ["gid", "pk", "src", "name", "nation", "city", "bal"]
+    inc_cols = ["id", "pk", "src", "name", "nation", "city", "gid"]
+    prim = pd.DataFrame(primary_rows, columns=prim_cols)  # noqa: F841 — read by DuckDB
+    inc = pd.DataFrame(incoming_rows, columns=inc_cols)  # noqa: F841
+    con = duckdb.connect()
+    expected = con.execute(_EQ_ORACLE).fetchall()
+    streams = {}
+    for _, _, stream in expected:
+        streams[stream] = streams.get(stream, 0) + 1
+    assert set(streams) == {"pre", "exact", "level1", "level2", "new"}, streams
+    # the fixture exercises what it claims: a binding cap and tie-breaks
+    truncated = con.execute(
+        "SELECT count(*) FROM (SELECT count(*) n FROM prim "
+        "GROUP BY nation || substr(name, 1, 1)) WHERE n > 3").fetchone()[0]
+    assert truncated > 0
+    tied = con.execute(
+        _EQ_ORACLE[:_EQ_ORACLE.rindex("SELECT l.id")]
+        + "SELECT count(*) FROM (SELECT id FROM cand1 WHERE score >= 1.0 "
+        "GROUP BY id, bal HAVING count(*) > 1)").fetchone()[0]
+    assert tied > 0  # equal score AND sort field: the gid decides
+
+    primary = spark.createDataFrame(
+        primary_rows, "gid string, pk int, src string, name string, nation string, "
+        "city string, bal double")
+    incoming = spark.createDataFrame(
+        incoming_rows, "id int, pk int, src string, name string, nation string, "
+        "city string, gid string").repartition(3, "city")
+    out = entity_match(
+        incoming, primary, _EQ_SPEC,
+        new_id_column=F.md5(F.concat(F.lit("new-"), F.col("id").cast("string"))),
+    )
+    assert out.columns == incoming.columns
+    got = sorted((r.id, r.gid) for r in out.collect())
+    assert got == sorted((i, g) for i, g, _ in expected)

@@ -1705,3 +1705,37 @@ def test_snapshot_log_resolves_timestamp_travel_after_rollback(
         for r in il.read_iceberg(spark, path, snapshot_id=sid).collect()
     )
     assert rows == [0, 1, 2]
+
+
+def test_data_column_delete_skips_partition_probe_without_error_log(spark, tmp_path):
+    """A data-column predicate takes the row path straight from its parse
+    tree; the partition probe never fails analysis and logs no ERROR."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    path = str(tmp_path / "probe")
+    iceberg_lite.write_iceberg(
+        spark,
+        spark.createDataFrame([Row(id=i, grp="a" if i % 2 else "b") for i in range(8)]),
+        path, partition_by=["grp"],
+    )
+    records: list = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    loggers = [
+        PySparkLogger.getLogger(n) for n in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    for lg in loggers:
+        lg.addHandler(handler)
+    try:
+        res = iceberg_lite.delete_iceberg(spark, path, "id >= 6")
+        part = iceberg_lite.delete_iceberg(spark, path, "grp = 'b'")
+    finally:
+        for lg in loggers:
+            lg.removeHandler(handler)
+    assert records == []
+    assert res["rows_deleted"] == 2 and res["metadata_only"] is False
+    assert part["metadata_only"] is True and part["rows_deleted"] == 3
+    got = sorted(r.id for r in iceberg_lite.read_iceberg(spark, path).collect())
+    assert got == [1, 3, 5]

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import json
+import os
+
+import pytest
 
 from aws_insurancelake_etl_spark.orchestrator import parse_drop_path, run_pipeline
 
@@ -263,3 +266,107 @@ def test_run_pipeline_lakehouse_entity_match(spark, tmp_path):
     finally:
         unregister_table("emdb.cust")
         unregister_table("emdb_consume.cust")
+
+
+def _entity_drop_setup(tmp_path, database: str) -> tuple[str, str, dict]:
+    """Landing root, config dir and entity spec for a customer feed with a
+    quarantine rule, a halt rule, partition-scoped consume SQL and an
+    exact + one fuzzy level entity match (the file-drop benchmark's shape)."""
+    landing, config_dir = tmp_path / "landing", tmp_path / "cfg"
+    config_dir.mkdir()
+    (config_dir / f"{database}-cust.json").write_text(json.dumps({
+        "input_spec": {"csv": {"header": True}},
+        "transform_spec": {"changetype": {"balance": "decimal(12,2)"}},
+    }))
+    (config_dir / f"dq-{database}-cust.json").write_text(json.dumps({
+        "after_transform": {
+            "quarantine_rules": ["ColumnValues 'balance' >= -500"],
+            "halt_rules": ["(ColumnExists 'custid') and (IsComplete 'custid')"],
+        }}))
+    (config_dir / f"spark-{database}-cust.sql").write_text(
+        "SELECT custid, src, name, nation, balance, year, month, day "
+        "FROM {database}.{table} "
+        "WHERE year = '{year}' AND month = '{month}' AND day = '{day}'")
+    spec = {
+        "primary_entity_table": "cust_primary",
+        "global_id_field": "gid",
+        "exact_match_fields": {"source_primary_key": "custid", "source_system_key": "src"},
+        "levels": [{
+            "blocks": ["nation", "name[:1]"], "threshold": 0.8,
+            "fields": [{"fieldname": "name", "type": "string", "method": "levenshtein",
+                        "threshold": 0.8, "weight": 1}],
+        }],
+    }
+    return str(landing), str(config_dir), spec
+
+
+def _customer_drop(landing: str, database: str, day: int, ids: range,
+                   aliases: range = range(0)) -> str:
+    """One CSV drop: persons ``ids`` under their own key, plus persons
+    ``aliases`` under a new key with a one-letter name typo, so only the
+    fuzzy level can resolve them."""
+    import hashlib
+
+    drop = os.path.join(landing, database, "cust", "2024", "03", f"{day:02d}")
+    os.makedirs(drop, exist_ok=True)
+    path = os.path.join(drop, f"cust-{day}.csv")
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write("CustId,Src,Name,Nation,Balance\n")
+        for i in [*ids, *aliases]:
+            name = hashlib.md5(str(i).encode()).hexdigest()[:10]
+            key = i
+            if i in aliases:
+                name, key = name[:-1] + "x", 1000 + i
+            fh.write(f"{key},s{i % 2},{name},n{i % 3},{(i * 37) % 900 - 520}\n")
+    return path
+
+
+def _unregister(database: str) -> None:
+    from aws_insurancelake_etl_spark.sources.lakehouse_sql import unregister_table
+
+    unregister_table(f"{database}.cust")
+    unregister_table(f"{database}_consume.cust")
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_merge_drop_job_count_is_pinned(spark, tmp_path, fmt):
+    """A warm MERGE drop (DQ, consume, entity match, MERGE) runs a bounded
+    number of Spark jobs; the ceilings are the counts measured when each
+    per-drop intermediate was made to compute once."""
+    database = f"jobs{fmt}"
+    landing, config_dir, spec = _entity_drop_setup(tmp_path, database)
+    sc = spark.sparkContext
+    try:
+        run_pipeline(spark, _customer_drop(landing, database, 1, range(0, 60)), landing,
+                     config_dir, entitymatch_spec=spec, table_format=fmt)
+        second = _customer_drop(landing, database, 2, range(45, 90), aliases=range(30, 45))
+        group = f"merge-drop-{fmt}"
+        sc.setJobGroup(group, "second drop")
+        try:
+            summary = run_pipeline(spark, second, landing, config_dir,
+                                   entitymatch_spec=spec, table_format=fmt)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        _unregister(database)
+    assert summary["stages"][-1] == "entity_match"
+    assert jobs <= {"delta": 29, "iceberg": 27}[fmt], f"{fmt} merge drop ran {jobs} jobs"
+
+
+def test_run_pipeline_releases_its_caches(spark, tmp_path):
+    """Frames cached for one drop are unpersisted when the drop returns:
+    the session's cache manager is empty after two drops."""
+    database = "cacherel"
+    landing, config_dir, spec = _entity_drop_setup(tmp_path, database)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    try:
+        drops = [_customer_drop(landing, database, 1, range(0, 40)),
+                 _customer_drop(landing, database, 2, range(30, 60), aliases=range(10, 20))]
+        for drop in drops:
+            run_pipeline(spark, drop, landing, config_dir, entitymatch_spec=spec,
+                         table_format="delta")
+            assert cache_manager.isEmpty()
+    finally:
+        _unregister(database)
